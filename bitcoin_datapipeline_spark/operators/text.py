@@ -2495,7 +2495,6 @@ def dedup_components(
             _release_ckpt(part)
         for c in prev_ckpt:
             _release_ckpt(c)
-        _release_ckpt(edges)
         _release_ckpt(pairs)
         raise RuntimeError(
             f"dedup_components did not converge within {max_iter} rounds; "

@@ -18,11 +18,15 @@ same 1e-6 grid so the breach compare is an exact integer compare — which
 agrees with the batch twin's decimal-cast-double strict compare because
 nearest-double conversion is monotone and injective on the grid's range.
 
-Disorder tolerance reuses the shared ``merge_fold`` discipline
-(streaming/disorder.py): bars inside ``allowed_lateness_buckets`` wait in
-a bounded pending pool and fold in bucket order; bars at or behind the
-folded frontier are dropped AND counted (``late_dropped`` on every row),
-with lateness 0 the strictest in-order policy.
+Disorder tolerance reuses the shared ``merge_fold`` discipline through
+streaming/disorder.fold_driver: bars inside ``allowed_lateness_buckets``
+wait in a bounded pending pool and fold in bucket order; bars at or
+behind the folded frontier are dropped AND counted (``late_dropped`` on
+every row), with lateness 0 the strictest in-order policy.  The bucket
+is the whole sort key, so the state keeps a single ``frontier_b`` and the
+driver doubles it into merge_fold's (key, tiebreak) pair.  The driver
+also owns the chunk concat, the vectorized price_change → 1e-6-unit
+conversion, the state repack and the output frame.
 
 One row per folded bar, append-mode (rows are final).  Rounding follows
 the engine-wide convention (``_round6`` == operators.r6 bit-for-bit).
@@ -33,13 +37,12 @@ q_cusum_path, same bounded-state contract as streaming/vpin.py.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.aggregates import CUSUM_H_ABS
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import fields, fold_driver
 from .vpin import _round6
 
 # price_change grid: 1e-6 (the engine-wide r6 bar convention); integer
@@ -83,36 +86,8 @@ def make_cusum_processor(
 ):
     h_units = int(round(float(h_abs) * UNITS_P))
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["bucket", "price_change"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in CUSUM_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (p, pmin, pmax, seen, cum_up, cum_dn,
-             f_b, n_late, pend_b, pend_x) = state.get
-            pend = list(zip(pend_b, pend_b, pend_x))
-        else:
-            p, pmin, pmax, seen = 0, 0, 0, False
-            cum_up, cum_dn = 0, 0
-            f_b, n_late = _NO_FRONTIER, 0
-            pend = []
-
-        new = (
-            (int(b), int(b), int(round(float(x) * UNITS_P)))
-            for b, x in zip(ev["bucket"], ev["price_change"])
-        )
-        fold, pend, (f_b, _), late_inc = merge_fold(
-            new, pend, (f_b, f_b), allowed_lateness_buckets
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        p, pmin, pmax, seen, cum_up, cum_dn = st
         rows = []
         for b, _tb, xu in fold:
             p += xu
@@ -126,28 +101,29 @@ def make_cusum_processor(
             cum_up += 1 if bu else 0
             cum_dn += 1 if bd else 0
             rows.append((
-                symbol,
-                int(b),
+                b,
                 _round6(su / UNITS_P),
                 _round6(sd / UNITS_P),
-                bool(bu),
-                bool(bd),
-                int(cum_up),
-                int(cum_dn),
-                int(n_late),
+                bu,
+                bd,
+                cum_up,
+                cum_dn,
             ))
+        return rows, (p, pmin, pmax, seen, cum_up, cum_dn)
 
-        state.update((
-            int(p), int(pmin), int(pmax), bool(seen),
-            int(cum_up), int(cum_dn),
-            int(f_b), int(n_late),
-            [t[0] for t in pend], [t[2] for t in pend],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in CUSUM_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_driver(
+        CUSUM_STATE_SCHEMA,
+        CUSUM_OUTPUT_SCHEMA,
+        # the bucket is the whole sort key (one frontier field): it
+        # fills both merge_fold key positions
+        fields(
+            ("bucket", "int64"), ("bucket", "int64"),
+            ("price_change", UNITS_P),
+        ),
+        init=(0, 0, 0, False, 0, 0),
+        step=step,
+        late=allowed_lateness_buckets,
+    )
 
 
 def stream_cusum(

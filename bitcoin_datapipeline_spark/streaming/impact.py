@@ -30,15 +30,23 @@ buffers bounded disorder so the fold order matches the batch sort;
 hard-late trades behind the folded frontier are dropped AND counted
 (``late_dropped`` on every emitted row).
 
-Structure note (deliberate): every processor in this module repeats the
-same ~45-line scaffold (chunk concat, state unpack/repack into parallel
-pend_* arrays, merge_fold, bucket-close loop) rather than sharing a
-fold-driver abstraction.  The shared DISCIPLINE lives in merge_fold —
-the one piece whose bugs would be correctness bugs; the scaffold is
-kept flat so each processor's state tuple, close logic, and emission
-convention are independently readable and independently property-tested
-against its batch twin, and a change to one state schema can never
-ripple through an abstraction into the other thirteen.
+Fold-driver contract: every twin here runs on
+streaming/disorder.fold_driver, which owns the shared envelope — chunk
+concat, the frontier / ``n_late`` / ``pend_*`` state fields (read and
+written by name from the twin's schema), the vectorized integer-unit
+conversion, merge_fold, the state repack, the ``symbol`` and
+``late_dropped`` output columns and the NULL coercion.  A twin declares
+only:
+
+- its input columns and event tuple (``fields(...)`` or an ``Events``
+  builder), the sort key first;
+- the initial values of its own state fields, in schema order;
+- ``step(fold, st) -> (rows, st)``: its fold and close/emit logic;
+- which output columns carry SQL NULL (``nulls``).
+
+Each twin keeps its own ``*_STATE_SCHEMA`` and ``*_OUTPUT_SCHEMA`` (the
+checkpoint layouts, pinned in tests/test_streaming.py), so a change to
+one twin's state can never reach another.
 
 cf. reference: extends the surface (the reference's aggregator computes
 live imbalance, `feature_builder.py:119-123,160-161`; impact/spread
@@ -51,14 +59,22 @@ from __future__ import annotations
 from collections import deque
 from fractions import Fraction
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.aggregates import KYLE_BUCKET_MS
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import Events, fields, fold_driver, to_units
 from .vpin import UNITS, _round6
+
+# the trade-tape event tuples: (event_ts, trade_id) sort key, then the
+# 1e-4-unit price (and qty) the TA twins fold
+_PRICE = fields(("event_ts", "int64"), ("trade_id", "int64"), ("price", UNITS))
+_PRICE_QTY = fields(
+    ("event_ts", "int64"), ("trade_id", "int64"),
+    ("price", UNITS), ("qty", UNITS),
+)
 
 KYLE_OUTPUT_SCHEMA = T.StructType(
     [
@@ -110,46 +126,9 @@ def _kyle_solve(n: int, sx_u: int, sy_u: int, sxy_u: int, sxx_u: int):
 def make_kyle_processor(
     bucket_ms: int = KYLE_BUCKET_MS, allowed_lateness_s: int = 0
 ):
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty", "is_buyer_maker"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in KYLE_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q, p_mk,
-             cur_b, cur_sv, cur_open, cur_close,
-             n_closed, sx_u, sy_u, sxy_u, sxx_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q, p_mk))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b, cur_sv, cur_open, cur_close = None, 0, None, None
-            n_closed = sx_u = sy_u = sxy_u = sxx_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)),
-             int(round(float(q) * UNITS)), bool(mk))
-            for ts, tid, p, q, mk in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"],
-                ev["is_buyer_maker"],
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        (cur_b, cur_sv, cur_open, cur_close,
+         n_closed, sx_u, sy_u, sxy_u, sxx_u) = st
         rows = []
 
         def close_bucket():
@@ -161,9 +140,7 @@ def make_kyle_processor(
             sxy_u += cur_sv * dp
             sxx_u += cur_sv * cur_sv
             lam, icpt = _kyle_solve(n_closed, sx_u, sy_u, sxy_u, sxx_u)
-            rows.append(
-                (symbol, int(cur_b), int(n_closed), lam, icpt, int(n_late))
-            )
+            rows.append((cur_b, n_closed, lam, icpt))
 
         for ts, tid, p_u, q_u, maker in fold:
             b = ts // bucket_ms
@@ -175,28 +152,22 @@ def make_kyle_processor(
             cur_sv += -q_u if maker else q_u
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_sv),
-            int(cur_open) if cur_open is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(n_closed), int(sx_u), int(sy_u), int(sxy_u), int(sxx_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in KYLE_OUTPUT_SCHEMA.fields]
-        )
-        # the den=0 guard emits SQL NULL like the batch twin — pandas
-        # would silently coerce None to NaN in a float64 column, and NaN
-        # survives Arrow as NaN, not null; object dtype keeps the None
-        for c in ("kyle_lambda", "impact_intercept"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_sv, cur_open, cur_close,
+                      n_closed, sx_u, sy_u, sxy_u, sxx_u)
 
-    return fn
+    return fold_driver(
+        KYLE_STATE_SCHEMA,
+        KYLE_OUTPUT_SCHEMA,
+        fields(
+            ("event_ts", "int64"), ("trade_id", "int64"), ("price", UNITS),
+            ("qty", UNITS), ("is_buyer_maker", "bool"),
+        ),
+        init=(None, 0, None, None, 0, 0, 0, 0, 0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        # the den=0 guard emits SQL NULL like the batch twin
+        nulls=("kyle_lambda", "impact_intercept"),
+    )
 
 
 def stream_kyle_lambda(
@@ -257,41 +228,8 @@ def _roll_solve(n: int, sx_u: int, sy_u: int, sxy_u: int):
 
 
 def make_roll_processor(allowed_lateness_s: int = 0):
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ROLL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            last_p, prev_dp = None, None
-            n_pairs = sx_u = sy_u = sxy_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u = st
         new_pairs = False
         for ts, tid, p_u in fold:
             if last_p is not None:
@@ -308,26 +246,19 @@ def make_roll_processor(allowed_lateness_s: int = 0):
         rows = []
         if new_pairs:
             cov, spread = _roll_solve(n_pairs, sx_u, sy_u, sxy_u)
-            rows.append((symbol, int(n_pairs), cov, spread, int(n_late)))
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(last_p) if last_p is not None else None,
-            int(prev_dp) if prev_dp is not None else None,
-            int(n_pairs), int(sx_u), int(sy_u), int(sxy_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in ROLL_OUTPUT_SCHEMA.fields]
-        )
-        # cov>=0 emits NULL spread like the batch twin (see kyle note)
-        out["roll_spread"] = (
-            out["roll_spread"].astype(object)
-            .where(pd.notna(out["roll_spread"]), None)
-        )
-        yield out
+            rows.append((n_pairs, cov, spread))
+        return rows, (last_p, prev_dp, n_pairs, sx_u, sy_u, sxy_u)
 
-    return fn
+    return fold_driver(
+        ROLL_STATE_SCHEMA,
+        ROLL_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, 0, 0, 0, 0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        # cov>=0 emits NULL spread like the batch twin
+        nulls=("roll_spread",),
+    )
 
 
 def stream_roll_spread(
@@ -402,44 +333,9 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
     from ..operators.aggregates import OFI_BUCKET_MS
 
     bucket_ms = OFI_BUCKET_MS if bucket_ms is None else bucket_ms
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["event_ts", "ingest_ts", "bid_px", "ask_px", "bid_sz", "ask_sz"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in OFI_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_ing, n_late, p_ts, p_ing, p_bpx, p_apx, p_qb, p_qa,
-             prev_bpx, prev_apx, prev_qb, prev_qa,
-             cur_b, cur_n, cur_u) = state.get
-            pend = list(zip(p_ts, p_ing, p_bpx, p_apx, p_qb, p_qa))
-        else:
-            f_ts = f_ing = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            prev_bpx = prev_apx = prev_qb = prev_qa = None
-            cur_b, cur_n, cur_u = None, 0, 0
-
-        new = (
-            (int(ts), int(ing), float(bp), float(ap),
-             int(round(float(qb) * SZ_UNITS)),
-             int(round(float(qa) * SZ_UNITS)))
-            for ts, ing, bp, ap, qb, qa in zip(
-                ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["bid_sz"], ev["ask_sz"],
-            )
-        )
-        fold, pend, (f_ts, f_ing), late_inc = merge_fold(
-            new, pend, (f_ts, f_ing), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        prev_bpx, prev_apx, prev_qb, prev_qa, cur_b, cur_n, cur_u = st
         rows = []
         for ts, _ing, bpx, apx, qb_u, qa_u in fold:
             if prev_bpx is not None:
@@ -448,9 +344,8 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
                     cur_b = b
                 elif b != cur_b:
                     rows.append((
-                        symbol, int(cur_b), int(cur_n),
+                        cur_b, cur_n,
                         _round6(float(Fraction(cur_u, SZ_UNITS))),
-                        int(n_late),
                     ))
                     cur_b, cur_n, cur_u = b, 0, 0
                 e_u = (
@@ -462,23 +357,21 @@ def make_ofi_processor(bucket_ms: int | None = None, allowed_lateness_s: int = 0
                 cur_n += 1
                 cur_u += e_u
             prev_bpx, prev_apx, prev_qb, prev_qa = bpx, apx, qb_u, qa_u
+        return rows, (prev_bpx, prev_apx, prev_qb, prev_qa,
+                      cur_b, cur_n, cur_u)
 
-        state.update((
-            int(f_ts), int(f_ing), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            prev_bpx, prev_apx,
-            int(prev_qb) if prev_qb is not None else None,
-            int(prev_qa) if prev_qa is not None else None,
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(cur_u),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in OFI_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_driver(
+        OFI_STATE_SCHEMA,
+        OFI_OUTPUT_SCHEMA,
+        fields(
+            ("event_ts", "int64"), ("ingest_ts", "int64"),
+            ("bid_px", "float64"), ("ask_px", "float64"),
+            ("bid_sz", SZ_UNITS), ("ask_sz", SZ_UNITS),
+        ),
+        init=(None, None, None, None, None, 0, 0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_ofi(
@@ -539,6 +432,25 @@ ESPREAD_STATE_SCHEMA = T.StructType(
 )
 
 
+def _espread_events(ev):
+    """Merged quote+trade rows → (sort_ts, is_q·2⁵⁰ + ingest, bid, ask,
+    bid_sz, ask_sz, price, trade event_ts); -1 fills the other kind's
+    fields.  A quote sorts at event_ts + 1 (strictly-before)."""
+    q = ev["kind"].to_numpy("int64") == 0
+    ts = ev["event_ts"].to_numpy("int64")
+    ing = ev["ingest_ts"].to_numpy("int64")
+
+    def quote(c):
+        return np.where(q, ev[c].to_numpy("float64"), -1.0)
+
+    return [
+        ts + q, np.where(q, ing, _ISQ_SHIFT + ing),
+        quote("bid_px"), quote("ask_px"), quote("bid_sz"), quote("ask_sz"),
+        np.where(q, -1.0, ev["price"].to_numpy("float64")),
+        np.where(q, -1, ts),
+    ]
+
+
 def make_espread_processor(allowed_lateness_s: int = 0):
     """Streaming effective/quoted spread — live twin of
     :func:`~..operators.aggregates.effective_spread`: folds the MERGED
@@ -556,47 +468,9 @@ def make_espread_processor(allowed_lateness_s: int = 0):
     prefix — so bounded disorder reproduces the batch sequence wherever
     that prefix is unique (full-prefix ties are resolved by the quote
     tuple inside the pending pool, the batch tail key)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
-                "bid_sz", "ask_sz", "price"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ESPREAD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_k2, n_late, p_ts, p_k2, p_b, p_a, p_bs, p_asz, p_px,
-             p_ets, qb, qa, cur_b, cur_n, s_eff, s_q) = state.get
-            pend = list(zip(p_ts, p_k2, p_b, p_a, p_bs, p_asz, p_px, p_ets))
-        else:
-            f_ts = f_k2 = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            qb = qa = None
-            cur_b, cur_n, s_eff, s_q = None, 0, 0.0, 0.0
-
-        def tuples():
-            for k, ts, ing, b, a, bs, asz, px in zip(
-                ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["bid_sz"], ev["ask_sz"], ev["price"],
-            ):
-                if int(k) == 0:
-                    yield (int(ts) + 1, int(ing), float(b), float(a),
-                           float(bs), float(asz), -1.0, -1)
-                else:
-                    yield (int(ts), _ISQ_SHIFT + int(ing), -1.0, -1.0,
-                           -1.0, -1.0, float(px), int(ts))
-
-        fold, pend, (f_ts, f_k2), late_inc = merge_fold(
-            tuples(), pend, (f_ts, f_k2), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        qb, qa, cur_b, cur_n, s_eff, s_q = st
         rows = []
         for _ts, k2, b, a, _bs, _asz, px, ets in fold:
             if k2 < _ISQ_SHIFT:  # quote
@@ -609,31 +483,28 @@ def make_espread_processor(allowed_lateness_s: int = 0):
                 cur_b = bkt
             elif bkt != cur_b:
                 rows.append((
-                    symbol, int(cur_b), int(cur_n),
+                    cur_b, cur_n,
                     _round6(s_eff / cur_n), _round6(s_q / cur_n),
-                    int(n_late),
                 ))
                 cur_b, cur_n, s_eff, s_q = bkt, 0, 0.0, 0.0
             mid = (qb + qa) / 2.0
             s_eff += 2.0 * abs(px - mid) / mid * 10000.0
             s_q += (qa - qb) / mid * 10000.0
             cur_n += 1
+        return rows, (qb, qa, cur_b, cur_n, s_eff, s_q)
 
-        state.update((
-            int(f_ts), int(f_k2), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            [t[6] for t in pend], [t[7] for t in pend],
-            qb, qa,
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), float(s_eff), float(s_q),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in ESPREAD_OUTPUT_SCHEMA.fields]
-        )
-
-    return fn
+    return fold_driver(
+        ESPREAD_STATE_SCHEMA,
+        ESPREAD_OUTPUT_SCHEMA,
+        Events(
+            ("kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
+             "bid_sz", "ask_sz", "price"),
+            _espread_events,
+        ),
+        init=(None, None, None, 0, 0.0, 0.0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_effective_spread(
@@ -723,46 +594,10 @@ def make_acf_processor(
     bars restricted to closed buckets (property-tested across random
     tapes and micro-batch boundaries, including the NULL variance
     guards)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ACF_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring,
-             m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-            m_n, m_sx, m_sy = list(m_n), list(m_sx), list(m_sy)
-            m_sxy, m_sxx, m_syy = list(m_sxy), list(m_sxx), list(m_syy)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-            m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy = (
-                [0] * max_lag for _ in range(6)
-            )
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        (cur_b, cur_close, prev_close, ring,
+         m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy) = st
         rows = []
 
         def close_bucket():
@@ -786,10 +621,9 @@ def make_acf_processor(
                     i = k - 1
                     if m_n[i] > 0:
                         rows.append((
-                            symbol, int(cur_b), k, int(m_n[i]),
+                            cur_b, k, m_n[i],
                             _acf_solve(m_n[i], m_sx[i], m_sy[i],
                                        m_sxy[i], m_sxx[i], m_syy[i]),
-                            int(n_late),
                         ))
             prev_close = cur_close
 
@@ -802,25 +636,18 @@ def make_acf_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-            [int(x) for x in m_n], [int(x) for x in m_sx],
-            [int(x) for x in m_sy], [int(x) for x in m_sxy],
-            [int(x) for x in m_sxx], [int(x) for x in m_syy],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in ACF_OUTPUT_SCHEMA.fields]
-        )
-        out["acf"] = out["acf"].astype(object).where(pd.notna(out["acf"]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring,
+                      m_n, m_sx, m_sy, m_sxy, m_sxx, m_syy)
 
-    return fn
+    return fold_driver(
+        ACF_STATE_SCHEMA,
+        ACF_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, [], *([0] * max_lag for _ in range(6))),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("acf",),
+    )
 
 
 def stream_acf(
@@ -921,42 +748,10 @@ def make_vr_processor(
 
     if q is None:
         q = VR_HORIZON
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in VR_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring,
-             n1, sx_u, sxx_u, nq, sq_u, sqq_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-            n1 = sx_u = sxx_u = nq = sq_u = sqq_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        (cur_b, cur_close, prev_close, ring,
+         n1, sx_u, sxx_u, nq, sq_u, sqq_u) = st
         rows = []
 
         def close_bucket():
@@ -974,10 +769,7 @@ def make_vr_processor(
                     sqq_u += qs * qs
                     ring = ring[1:]
                 v1, vq, vr = _vr_solve(n1, sx_u, sxx_u, nq, sq_u, sqq_u, q)
-                rows.append(
-                    (symbol, int(cur_b), int(n1), int(nq), v1, vq, vr,
-                     int(n_late))
-                )
+                rows.append((cur_b, n1, nq, v1, vq, vr))
             prev_close = cur_close
 
         for ts, tid, p_u in fold:
@@ -989,24 +781,18 @@ def make_vr_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-            int(n1), int(sx_u), int(sxx_u), int(nq), int(sq_u), int(sqq_u),
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in VR_OUTPUT_SCHEMA.fields]
-        )
-        for c in ("var_1", "var_q", "variance_ratio"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring,
+                      n1, sx_u, sxx_u, nq, sq_u, sqq_u)
 
-    return fn
+    return fold_driver(
+        VR_STATE_SCHEMA,
+        VR_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, [], 0, 0, 0, 0, 0, 0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("var_1", "var_q", "variance_ratio"),
+    )
 
 
 def stream_variance_ratio(
@@ -1086,49 +872,13 @@ def make_twa_processor(allowed_lateness_s: int = 0):
     cf. reference: extends the surface (live form of the engine's own
     batch TWA extension; the reference's BBA features are
     arrival-weighted, `feature_builder.py:220-225`)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["event_ts", "ingest_ts", "bid_px", "ask_px",
-                "bid_sz", "ask_sz"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in TWA_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_ing, n_late, p_ts, p_ing, p_b, p_a, p_bs, p_as,
-             lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw) = state.get
-            pend = list(zip(p_ts, p_ing, p_b, p_a, p_bs, p_as))
-        else:
-            f_ts = f_ing = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            lq_ts, lq_spread = None, 0.0
-            cur_b, cur_n, cur_w, cur_sw = None, 0, 0, 0.0
-
-        new = (
-            (int(ts), int(ing), float(b), float(a), float(bs), float(asz))
-            for ts, ing, b, a, bs, asz in zip(
-                ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["bid_sz"], ev["ask_sz"],
-            )
-        )
-        fold, pend, (f_ts, f_ing), late_inc = merge_fold(
-            new, pend, (f_ts, f_ing), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw = st
         rows = []
 
         def emit():
-            rows.append((
-                symbol, int(cur_b), int(cur_n), int(cur_w),
-                _round6(cur_sw / cur_w), int(n_late),
-            ))
+            rows.append((cur_b, cur_n, cur_w, _round6(cur_sw / cur_w)))
 
         for ts, _ing, b, a, _bs, _asz in fold:
             if lq_ts is not None and ts > lq_ts:
@@ -1153,21 +903,20 @@ def make_twa_processor(allowed_lateness_s: int = 0):
             lq_ts = ts
             lq_spread = (a - b) / ((b + a) / 2.0) * 10000.0
 
-        state.update((
-            int(f_ts), int(f_ing), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
-            int(lq_ts) if lq_ts is not None else None,
-            float(lq_spread),
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(cur_w), float(cur_sw),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in TWA_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (lq_ts, lq_spread, cur_b, cur_n, cur_w, cur_sw)
 
-    return fn
+    return fold_driver(
+        TWA_STATE_SCHEMA,
+        TWA_OUTPUT_SCHEMA,
+        fields(
+            ("event_ts", "int64"), ("ingest_ts", "int64"),
+            ("bid_px", "float64"), ("ask_px", "float64"),
+            ("bid_sz", "float64"), ("ask_sz", "float64"),
+        ),
+        init=(None, 0.0, None, 0, 0, 0.0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_twa_spread(
@@ -1232,40 +981,9 @@ def make_rsi_processor(
 
     if period is None:
         period = RSI_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in RSI_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, prev_close, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, prev_close, ring = st
         rows = []
 
         def close_bucket():
@@ -1283,7 +1001,7 @@ def make_rsi_processor(
                     rsi_v = (
                         _round6(100.0 * g / (g + l)) if g + l > 0.0 else None
                     )
-                    rows.append((symbol, int(cur_b), rsi_v, int(n_late)))
+                    rows.append((cur_b, rsi_v))
             prev_close = cur_close
 
         for ts, tid, p_u in fold:
@@ -1295,22 +1013,17 @@ def make_rsi_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(prev_close) if prev_close is not None else None,
-            [int(x) for x in ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in RSI_OUTPUT_SCHEMA.fields]
-        )
-        out["rsi"] = out["rsi"].astype(object).where(pd.notna(out["rsi"]), None)
-        yield out
+        return rows, (cur_b, cur_close, prev_close, ring)
 
-    return fn
+    return fold_driver(
+        RSI_STATE_SCHEMA,
+        RSI_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, []),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("rsi",),
+    )
 
 
 def stream_rsi(
@@ -1379,40 +1092,9 @@ def make_atr_processor(
 
     if period is None:
         period = ATR_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in ATR_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_h, cur_l, cur_c, prev_c, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_h = cur_l = cur_c = prev_c = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_h, cur_l, cur_c, prev_c, ring = st
         rows = []
 
         def close_bucket():
@@ -1430,10 +1112,7 @@ def make_atr_processor(
                 s = float(Fraction(sum(ring), UNITS))
                 av = s / period
                 close_d = float(Fraction(cur_c, UNITS))
-                rows.append((
-                    symbol, int(cur_b), _round6(av),
-                    _round6(av / close_d), int(n_late),
-                ))
+                rows.append((cur_b, _round6(av), _round6(av / close_d)))
             prev_c = cur_c
 
         for ts, tid, p_u in fold:
@@ -1447,22 +1126,16 @@ def make_atr_processor(
             cur_l = min(cur_l, p_u)
             cur_c = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            int(prev_c) if prev_c is not None else None,
-            [int(x) for x in ring],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in ATR_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cur_b, cur_h, cur_l, cur_c, prev_c, ring)
 
-    return fn
+    return fold_driver(
+        ATR_STATE_SCHEMA,
+        ATR_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, None, None, []),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_atr(
@@ -1555,43 +1228,8 @@ def make_macd_processor(
         MACD_WINDOW,
     )
 
-    late_ms = allowed_lateness_s * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MACD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_c, c_ring, m_ring, prev_hist) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            c_ring = list(c_ring)
-            m_ring = list(m_ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_c = None
-            c_ring = []
-            m_ring = []
-            prev_hist = None
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_c, c_ring, m_ring, prev_hist = st
         rows = []
 
         def close_bucket():
@@ -1615,8 +1253,8 @@ def make_macd_processor(
             else:
                 cross = (hist > 0) != (prev_hist > 0)
             rows.append((
-                symbol, int(cur_b), _round6(macd_raw), _round6(sig_raw),
-                hist, cross, len(c_ring), int(n_late),
+                cur_b, _round6(macd_raw), _round6(sig_raw),
+                hist, cross, len(c_ring),
             ))
             prev_hist = hist
 
@@ -1629,27 +1267,17 @@ def make_macd_processor(
                 cur_b = b
             cur_c = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            [int(x) for x in c_ring],
-            [float(x) for x in m_ring],
-            prev_hist,
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in MACD_OUTPUT_SCHEMA.fields]
-        )
-        out["crossover"] = (
-            out["crossover"].astype(object).where(
-                pd.notna(out["crossover"]), None
-            )
-        )
-        yield out
+        return rows, (cur_b, cur_c, c_ring, m_ring, prev_hist)
 
-    return fn
+    return fold_driver(
+        MACD_STATE_SCHEMA,
+        MACD_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, [], [], None),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("crossover",),
+    )
 
 
 def stream_macd(
@@ -1714,6 +1342,28 @@ MARKOUT_STATE_SCHEMA = T.StructType(
 )
 
 
+def _markout_events(ev):
+    """Merged quote+trade rows → (sort_ts, is_q·2⁵⁰ + ingest, bid_u,
+    ask_u, px_u, maker); -1/False fill the other kind's fields.  A quote
+    sorts at event_ts + 1 (strictly-before)."""
+    q = ev["kind"].to_numpy("int64") == 0
+    ts = ev["event_ts"].to_numpy("int64")
+    ing = ev["ingest_ts"].to_numpy("int64")
+
+    def units(c, side):
+        # zero-fill the other kind's NULLs before the int cast
+        px = np.where(side, ev[c].to_numpy("float64"), 0.0)
+        return np.where(side, to_units(px, UNITS), -1)
+
+    return [
+        ts + q, np.where(q, ing, _ISQ_SHIFT + ing),
+        units("bid_px", q), units("ask_px", q), units("price", ~q),
+        np.where(
+            q, False, ev["is_buyer_maker"].to_numpy("bool", na_value=False)
+        ),
+    ]
+
+
 def make_markout_processor(allowed_lateness_s: int = 0):
     """Live multi-horizon markouts — the streaming twin of
     operators/aggregates.markout, and the family's only DELAYED-emission
@@ -1765,68 +1415,30 @@ def make_markout_processor(allowed_lateness_s: int = 0):
             f"({max_h} ms) for the emission rule to be safe"
         )
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        cols = ["kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
-                "price", "is_buyer_maker"]
-        chunks = [pdf[cols] for pdf in pdfs if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MARKOUT_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_k2, n_late, p_ts, p_k2, p_b, p_a, p_px, p_mk,
-             q_avail, q_bid, q_ask, t_ts, t_px, t_mk, t_mid0, t_mo,
-             seen_key, bk_id, bk_n, bk_s) = state.get
-            pend = list(zip(p_ts, p_k2, p_b, p_a, p_px, p_mk))
-            q_hist = list(zip(q_avail, q_bid, q_ask))
-            # rebuild the per-horizon queues: len(mo) routes each trade,
-            # and the saved flat order (queue-by-queue, ts-ascending
-            # within) keeps every queue ts-sorted on reload
-            queues = [deque() for _ in hs]
-            for ts, px, mk, m0, mo in zip(t_ts, t_px, t_mk, t_mid0, t_mo):
-                queues[len(mo)].append([ts, px, mk, m0, list(mo)])
-            # identity-dedup keys grouped BY BUCKET (flat ts:px:mk state
-            # strings, bucket = ts div 60000): emission then drops a whole
-            # bucket's keys in O(1) instead of rescanning every key per
-            # emitted bucket — the r10 skew streaming bench's profile put
-            # 87% of the processor in that rescan on a hot-symbol tape
-            seen = {}
-            for k in seen_key:
-                seen.setdefault(
-                    int(k.split(":")[0]) // 60000, set()
-                ).add(k)
-            buckets = {
-                b: [n, list(s)] for b, n, s in zip(bk_id, bk_n, bk_s)
-            }
-        else:
-            f_ts = f_k2 = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            q_hist = []
-            queues = [deque() for _ in hs]
-            seen = {}
-            buckets = {}
-
-        def tuples():
-            for k, ts, ing, b, a, px, mk in zip(
-                ev["kind"], ev["event_ts"], ev["ingest_ts"], ev["bid_px"],
-                ev["ask_px"], ev["price"], ev["is_buyer_maker"],
-            ):
-                if int(k) == 0:
-                    yield (int(ts) + 1, int(ing),
-                           int(round(float(b) * UNITS)),
-                           int(round(float(a) * UNITS)), -1, False)
-                else:
-                    yield (int(ts), _ISQ_SHIFT + int(ing), -1, -1,
-                           int(round(float(px) * UNITS)), bool(mk))
-
-        fold, pend, (f_ts, f_k2), late_inc = merge_fold(
-            tuples(), pend, (f_ts, f_k2), late_ms
-        )
-        n_late += late_inc
+    def step(fold, st):
+        # an empty fold leaves the frontier where the last call already
+        # finalized, emitted and pruned: the state is unchanged
+        if not fold:
+            return [], st
+        f_ts = fold[-1][0]  # the frontier merge_fold advanced to
+        (q_avail, q_bid, q_ask, t_ts, t_px, t_mk, t_mid0, t_mo,
+         seen_key, bk_id, bk_n, bk_s) = st
+        q_hist = list(zip(q_avail, q_bid, q_ask))
+        # rebuild the per-horizon queues: len(mo) routes each trade,
+        # and the saved flat order (queue-by-queue, ts-ascending
+        # within) keeps every queue ts-sorted on reload
+        queues = [deque() for _ in hs]
+        for ts, px, mk, m0, mo in zip(t_ts, t_px, t_mk, t_mid0, t_mo):
+            queues[len(mo)].append([ts, px, mk, m0, list(mo)])
+        # identity-dedup keys grouped BY BUCKET (flat ts:px:mk state
+        # strings, bucket = ts div 60000): emission then drops a whole
+        # bucket's keys in O(1) instead of rescanning every key per
+        # emitted bucket — the r10 skew streaming bench's profile put
+        # 87% of the processor in that rescan on a hot-symbol tape
+        seen = {}
+        for k in seen_key:
+            seen.setdefault(int(k.split(":")[0]) // 60000, set()).add(k)
+        buckets = {b: [n, list(s)] for b, n, s in zip(bk_id, bk_n, bk_s)}
 
         def mid_at(x):
             """Prevailing mid at instant x: last quote with avail <= x
@@ -1892,9 +1504,9 @@ def make_markout_processor(allowed_lateness_s: int = 0):
             if f_ts >= (b + 1) * 60000 + max_h:
                 n, sums = buckets.pop(b)
                 rows.append((
-                    symbol, int(b), int(n),
+                    b, n,
                     _round6(sums[0] / n), _round6(sums[1] / n),
-                    _round6(sums[2] / n), int(n_late),
+                    _round6(sums[2] / n),
                 ))
                 # identity keys of an emitted bucket can never recur
                 # (the frontier is past the bucket) — O(1) per emission
@@ -1926,26 +1538,29 @@ def make_markout_processor(allowed_lateness_s: int = 0):
         trades = sorted(
             (t for q in queues for t in q), key=lambda t: (t[0], len(t[4]))
         )
-        state.update((
-            int(f_ts), int(f_k2), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            [t[4] for t in pend], [t[5] for t in pend],
+        ids = sorted(buckets)
+        return rows, (
             [q[0] for q in q_hist], [q[1] for q in q_hist],
             [q[2] for q in q_hist],
             [t[0] for t in trades], [t[1] for t in trades],
             [t[2] for t in trades], [t[3] for t in trades],
-            [[float(v) for v in t[4]] for t in trades],
+            [t[4] for t in trades],
             sorted(k for s in seen.values() for k in s),
-            sorted(buckets),
-            [buckets[b][0] for b in sorted(buckets)],
-            [[float(v) for v in buckets[b][1]] for b in sorted(buckets)],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in MARKOUT_OUTPUT_SCHEMA.fields]
+            ids, [buckets[b][0] for b in ids], [buckets[b][1] for b in ids],
         )
 
-    return fn
+    return fold_driver(
+        MARKOUT_STATE_SCHEMA,
+        MARKOUT_OUTPUT_SCHEMA,
+        Events(
+            ("kind", "event_ts", "ingest_ts", "bid_px", "ask_px",
+             "price", "is_buyer_maker"),
+            _markout_events,
+        ),
+        init=([],) * 12,
+        step=step,
+        late=late_ms,
+    )
 
 
 def stream_markout(
@@ -2019,42 +1634,9 @@ def make_stoch_processor(
 
     if period is None:
         period = STOCH_PERIOD
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in STOCH_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            hi_ring, lo_ring, k_ring = (
-                list(hi_ring), list(lo_ring), list(k_ring)
-            )
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_h = cur_l = cur_c = None
-            hi_ring, lo_ring, k_ring = [], [], []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring = st
         rows = []
 
         def close_bucket():
@@ -2087,7 +1669,7 @@ def make_stoch_processor(
                 d = _round6(d)
             else:
                 d = None
-            rows.append((symbol, int(cur_b), k, d, int(n_late)))
+            rows.append((cur_b, k, d))
 
         for ts, tid, p_u in fold:
             b = ts // bucket_ms
@@ -2100,25 +1682,17 @@ def make_stoch_processor(
             cur_l = min(cur_l, p_u)
             cur_c = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            [int(x) for x in hi_ring], [int(x) for x in lo_ring],
-            [int(x) for x in k_ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in STOCH_OUTPUT_SCHEMA.fields]
-        )
-        for c in ("k_pct", "d_pct"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_h, cur_l, cur_c, hi_ring, lo_ring, k_ring)
 
-    return fn
+    return fold_driver(
+        STOCH_STATE_SCHEMA,
+        STOCH_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, None, [], [], []),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("k_pct", "d_pct"),
+    )
 
 
 def stream_stochastic(
@@ -2180,44 +1754,9 @@ def make_obv_processor(
     batch operator's DECIMAL prefix sum over bars restricted to closed
     buckets (property-tested).  Disorder discipline: merge_fold
     bounded-lateness pool, hard-late drop-and-count."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in OBV_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q,
-             cur_b, cur_close, cur_vol, prev_close, obv_u) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = None
-            cur_vol = obv_u = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)),
-             int(round(float(q) * UNITS)))
-            for ts, tid, p, q in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, cur_vol, prev_close, obv_u = st
         rows = []
 
         def close_bucket():
@@ -2230,11 +1769,9 @@ def make_obv_processor(
                 signed = -cur_vol
             obv_u += signed
             rows.append((
-                symbol,
-                int(cur_b),
+                cur_b,
                 float(Fraction(cur_vol, UNITS)),
                 float(Fraction(obv_u, UNITS)),
-                int(n_late),
             ))
             prev_close = cur_close
 
@@ -2249,21 +1786,16 @@ def make_obv_processor(
             cur_close = p_u
             cur_vol += q_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(cur_vol),
-            int(prev_close) if prev_close is not None else None,
-            int(obv_u),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in OBV_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cur_b, cur_close, cur_vol, prev_close, obv_u)
 
-    return fn
+    return fold_driver(
+        OBV_STATE_SCHEMA,
+        OBV_OUTPUT_SCHEMA,
+        _PRICE_QTY,
+        init=(None, None, 0, None, 0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_obv(
@@ -2343,7 +1875,6 @@ def make_boll_processor(
         period = BOLL_PERIOD
     if k is None:
         k = BOLL_K
-    late_ms = allowed_lateness_s * 1000
     # the day-scorecard twins derive the day as cur_b // buckets_per_day,
     # which equals the batch form's `bucket div 1440` ONLY when bucket_ms
     # divides a day exactly — a non-divisor width would silently emit
@@ -2354,49 +1885,15 @@ def make_boll_processor(
     )
     buckets_per_day = 86_400_000 // bucket_ms
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, ring,
-             cur_day, day_n, day_up, day_lo, day_bw) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = cur_day = None
-            ring = []
-            day_n = day_up = day_lo = 0
-            day_bw = 0.0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, ring, cur_day, day_n, day_up, day_lo, day_bw = st
         rows = []
 
         def emit_day():
             nonlocal day_n, day_up, day_lo, day_bw
             if day_n > 0:
                 rows.append((
-                    symbol, int(cur_day), int(day_n), int(day_up),
-                    int(day_lo), _round6(day_bw / day_n), int(n_late),
+                    cur_day, day_n, day_up, day_lo, _round6(day_bw / day_n),
                 ))
             day_n = day_up = day_lo = 0
             day_bw = 0.0
@@ -2436,21 +1933,17 @@ def make_boll_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            [int(x) for x in ring],
-            int(cur_day) if cur_day is not None else None,
-            int(day_n), int(day_up), int(day_lo), float(day_bw),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cur_b, cur_close, ring,
+                      cur_day, day_n, day_up, day_lo, day_bw)
 
-    return fn
+    return fold_driver(
+        BOLL_STATE_SCHEMA,
+        BOLL_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, [], None, 0, 0, 0, 0.0),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_bollinger(
@@ -2515,45 +2008,9 @@ def make_momentum_processor(
     so the emitted differences are the batch DECIMAL-exact values
     (property-tested; the first bar's NULL momentum and the second
     bar's NULL acceleration included)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price", "qty"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in MOM_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr, p_q,
-             cur_b, cur_close, cur_vol,
-             prev_close, prev_mom, prev_vol) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr, p_q))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = prev_close = prev_mom = prev_vol = None
-            cur_vol = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)),
-             int(round(float(q) * UNITS)))
-            for ts, tid, p, q in zip(
-                ev["event_ts"], ev["trade_id"], ev["price"], ev["qty"]
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, cur_vol, prev_close, prev_mom, prev_vol = st
         rows = []
 
         def close_bucket():
@@ -2564,13 +2021,11 @@ def make_momentum_processor(
             )
             vt = None if prev_vol is None else cur_vol - prev_vol
             rows.append((
-                symbol,
-                int(cur_b),
+                cur_b,
                 float(Fraction(cur_close, UNITS)),
                 None if mom is None else float(Fraction(mom, UNITS)),
                 None if accel is None else float(Fraction(accel, UNITS)),
                 None if vt is None else float(Fraction(vt, UNITS)),
-                int(n_late),
             ))
             prev_close, prev_mom, prev_vol = cur_close, mom, cur_vol
 
@@ -2585,25 +2040,18 @@ def make_momentum_processor(
             cur_close = p_u
             cur_vol += q_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(cur_vol),
-            int(prev_close) if prev_close is not None else None,
-            int(prev_mom) if prev_mom is not None else None,
-            int(prev_vol) if prev_vol is not None else None,
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in MOM_OUTPUT_SCHEMA.fields]
-        )
-        for c in ("momentum", "acceleration", "volume_trend"):
-            out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        yield out
+        return rows, (cur_b, cur_close, cur_vol,
+                      prev_close, prev_mom, prev_vol)
 
-    return fn
+    return fold_driver(
+        MOM_STATE_SCHEMA,
+        MOM_OUTPUT_SCHEMA,
+        _PRICE_QTY,
+        init=(None, None, 0, None, None, None),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("momentum", "acceleration", "volume_trend"),
+    )
 
 
 def stream_momentum(
@@ -2669,41 +2117,9 @@ def make_drawdown_processor(
     doubles the batch close/peak − 1.0 derives (Fraction-exact unit
     conversion, Python tuple order = the batch struct-min order since
     bucket is unique per symbol)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in DD_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, peak, n_bars,
-             w_dd, w_b, w_peak, w_close) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = peak = None
-            n_bars = 0
-            w_dd = w_b = w_peak = w_close = None
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, peak, n_bars, w_dd, w_b, w_peak, w_close = st
         rows = []
 
         def close_bucket():
@@ -2713,18 +2129,16 @@ def make_drawdown_processor(
             close_d = float(Fraction(cur_close, UNITS))
             peak_d = float(Fraction(peak, UNITS))
             dd = close_d / peak_d - 1.0
-            cand = (dd, int(cur_b), peak, cur_close)
+            cand = (dd, cur_b, peak, cur_close)
             if w_dd is None or cand < (w_dd, w_b, w_peak, w_close):
                 w_dd, w_b, w_peak, w_close = cand
             rows.append((
-                symbol,
-                int(cur_b),
-                int(n_bars),
+                cur_b,
+                n_bars,
                 _round6(w_dd),
-                int(w_b),
+                w_b,
                 _round6(float(Fraction(w_peak, UNITS))),
                 _round6(float(Fraction(w_close, UNITS))),
-                int(n_late),
             ))
 
         for ts, tid, p_u in fold:
@@ -2736,24 +2150,17 @@ def make_drawdown_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            int(peak) if peak is not None else None,
-            int(n_bars),
-            float(w_dd) if w_dd is not None else None,
-            int(w_b) if w_b is not None else None,
-            int(w_peak) if w_peak is not None else None,
-            int(w_close) if w_close is not None else None,
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in DD_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cur_b, cur_close, peak, n_bars,
+                      w_dd, w_b, w_peak, w_close)
 
-    return fn
+    return fold_driver(
+        DD_STATE_SCHEMA,
+        DD_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, None, 0, None, None, None, None),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_drawdown(
@@ -2829,7 +2236,6 @@ def make_candle_processor(
         DOJI_BODY_FRAC,
     )
 
-    late_ms = allowed_lateness_s * 1000
     # the day-scorecard twins derive the day as cur_b // buckets_per_day,
     # which equals the batch form's `bucket div 1440` ONLY when bucket_ms
     # divides a day exactly — a non-divisor width would silently emit
@@ -2840,49 +2246,16 @@ def make_candle_processor(
     )
     buckets_per_day = 86_400_000 // bucket_ms
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in CANDLE_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_o, cur_h, cur_l, cur_c,
-             prev_o, prev_c, cur_day,
-             d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_o = cur_h = cur_l = cur_c = None
-            prev_o = prev_c = cur_day = None
-            d_bars = d_flat = d_doji = d_hammer = d_bull = d_bear = 0
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        (cur_b, cur_o, cur_h, cur_l, cur_c, prev_o, prev_c, cur_day,
+         d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear) = st
         rows = []
 
         def emit_day():
             nonlocal d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear
             if d_bars > 0:
                 rows.append((
-                    symbol, int(cur_day), int(d_bars), int(d_flat),
-                    int(d_doji), int(d_hammer), int(d_bull), int(d_bear),
-                    int(n_late),
+                    cur_day, d_bars, d_flat, d_doji, d_hammer, d_bull, d_bear,
                 ))
             d_bars = d_flat = d_doji = d_hammer = d_bull = d_bear = 0
 
@@ -2933,26 +2306,18 @@ def make_candle_processor(
                 cur_l = min(cur_l, p_u)
             cur_c = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_o) if cur_o is not None else None,
-            int(cur_h) if cur_h is not None else None,
-            int(cur_l) if cur_l is not None else None,
-            int(cur_c) if cur_c is not None else None,
-            int(prev_o) if prev_o is not None else None,
-            int(prev_c) if prev_c is not None else None,
-            int(cur_day) if cur_day is not None else None,
-            int(d_bars), int(d_flat), int(d_doji),
-            int(d_hammer), int(d_bull), int(d_bear),
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in CANDLE_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cur_b, cur_o, cur_h, cur_l, cur_c, prev_o, prev_c,
+                      cur_day, d_bars, d_flat, d_doji, d_hammer, d_bull,
+                      d_bear)
 
-    return fn
+    return fold_driver(
+        CANDLE_STATE_SCHEMA,
+        CANDLE_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None,) * 8 + (0,) * 6,
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_candle_patterns(
@@ -3015,40 +2380,9 @@ def make_rolling_vol_processor(
     rounding grain, so rows EQUAL the batch operator over bars
     restricted to closed buckets (property-tested; the single-bar NULL
     included)."""
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "price"]] for pdf in pdfs if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in RVOL_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (f_ts, f_tid, n_late, p_ts, p_tid, p_pr,
-             cur_b, cur_close, ring) = state.get
-            pend = list(zip(p_ts, p_tid, p_pr))
-            ring = list(ring)
-        else:
-            f_ts = f_tid = _NO_FRONTIER
-            n_late = 0
-            pend = []
-            cur_b = cur_close = None
-            ring = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(p) * UNITS)))
-            for ts, tid, p in zip(ev["event_ts"], ev["trade_id"], ev["price"])
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cur_b, cur_close, ring = st
         rows = []
 
         def close_bucket():
@@ -3065,14 +2399,7 @@ def make_rolling_vol_processor(
                 vol = _round6(float(var) ** 0.5)
             else:
                 vol = None
-            rows.append((
-                symbol,
-                int(cur_b),
-                float(Fraction(cur_close, UNITS)),
-                vol,
-                int(n),
-                int(n_late),
-            ))
+            rows.append((cur_b, float(Fraction(cur_close, UNITS)), vol, n))
 
         for ts, tid, p_u in fold:
             b = ts // bucket_ms
@@ -3083,25 +2410,17 @@ def make_rolling_vol_processor(
                 cur_b = b
             cur_close = p_u
 
-        state.update((
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend],
-            int(cur_b) if cur_b is not None else None,
-            int(cur_close) if cur_close is not None else None,
-            [int(x) for x in ring],
-        ))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in RVOL_OUTPUT_SCHEMA.fields]
-        )
-        out["volatility"] = (
-            out["volatility"].astype(object).where(
-                pd.notna(out["volatility"]), None
-            )
-        )
-        yield out
+        return rows, (cur_b, cur_close, ring)
 
-    return fn
+    return fold_driver(
+        RVOL_STATE_SCHEMA,
+        RVOL_OUTPUT_SCHEMA,
+        _PRICE,
+        init=(None, None, []),
+        step=step,
+        late=allowed_lateness_s * 1000,
+        nulls=("volatility",),
+    )
 
 
 def stream_rolling_volatility(

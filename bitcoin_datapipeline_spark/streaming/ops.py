@@ -19,8 +19,11 @@ keyed mutable gap state           applyInPandasWithState custom stateful
 (gap_detector/README.md)          operator carrying last_ts per symbol
 sequence-number resume            checkpointLocation offset tracking
 (kinesis_consumer.py:231-272)
-idempotent sink w/ unique index   foreachBatch + dropDuplicates against
-(db_writer.py:187-225)            the epoch batch (exactly-once-ish)
+idempotent sink w/ unique index   no sink-side twin: stream_dedup drops
+(db_writer.py:187-225)            duplicates upstream, and
+                                  dedup.sink_key_stats counts the sink's
+                                  duplicate keys (a per-epoch
+                                  dropDuplicates cannot see earlier appends)
 ===============================  ==========================================
 
 The arrival-vs-event-time split in the reference (buffers keyed by
@@ -369,17 +372,6 @@ def stream_gap_detect(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def idempotent_parquet_sink(out_dir: str, keys: list[str]):
-    """foreachBatch sink: per-epoch dedup before append — with the streaming
-    dedup upstream this gives the reference's unique-index idempotency
-    (db_writer.py:131-135) on a constraint-less Parquet sink."""
-
-    def write(df: DataFrame, epoch_id: int) -> None:
-        df.dropDuplicates(keys).write.mode("append").parquet(out_dir)
-
-    return write
 
 
 def latest_snapshot_sink(out_dir: str, key: str = "symbol", ts_col: str = "bucket"):

@@ -39,9 +39,13 @@ EQUALS its batch row, not merely approximates it.
 The batch twin additionally reports each symbol's still-open last bucket;
 the equivalence test compares against batch minus that partial tail.
 
-Events are processed in (event_ts, trade_id) order within each
-micro-batch, chunks accumulated before sorting (the same Arrow-boundary
-hazard as streaming/grid.py).
+The envelope — chunk concat (all of a micro-batch's Arrow chunks are
+accumulated before sorting, the same hazard as streaming/grid.py), the
+frontier / ``n_late`` / ``pend_*`` state fields, the vectorized qty →
+integer-unit conversion and the output frame — is
+streaming/disorder.fold_driver's; this module declares the volume-clock
+fold and its own state fields, and keeps ``VPIN_STATE_SCHEMA`` as its
+checkpoint layout.  Events fold in (event_ts, trade_id) order.
 
 cf. reference: the aggregator's live imbalance feature
 (feature_builder.py:160-161) on the wall clock; this is its
@@ -52,13 +56,12 @@ from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.aggregates import VPIN_BUCKET_VOLUME, VPIN_WINDOW
-from .disorder import _NO_FRONTIER, merge_fold
+from .disorder import fields, fold_driver
 
 # qty grid: 1e-4 (FIXTURES.md).  Integer units assume qty sits on a <=4dp
 # grid — there float->int rounding has no ties, so it agrees with the
@@ -118,45 +121,9 @@ def make_vpin_processor(
     allowed_lateness_s: int = 0,
 ):
     v_units = bucket_volume * UNITS
-    late_ms = allowed_lateness_s * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        symbol = key[0]
-        chunks = [
-            pdf[["event_ts", "trade_id", "qty", "is_buyer_maker"]]
-            for pdf in pdfs
-            if len(pdf)
-        ]
-        if not chunks:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in VPIN_OUTPUT_SCHEMA.fields]
-            )
-            return
-        ev = pd.concat(chunks, ignore_index=True)
-        if state.exists:
-            (cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol,
-             f_ts, f_tid, n_late,
-             p_ts, p_tid, p_units, p_maker) = state.get
-            ring_imb, ring_vol = list(ring_imb), list(ring_vol)
-            pend = list(zip(p_ts, p_tid, p_units, p_maker))
-        else:
-            cum, cur_b, cur_n, buy, sell = 0, None, 0, 0, 0
-            ring_imb, ring_vol = [], []
-            f_ts, f_tid, n_late = _NO_FRONTIER, _NO_FRONTIER, 0
-            pend = []
-
-        new = (
-            (int(ts), int(tid), int(round(float(qty) * UNITS)), bool(maker))
-            for ts, tid, qty, maker in zip(
-                ev["event_ts"], ev["trade_id"], ev["qty"],
-                ev["is_buyer_maker"],
-            )
-        )
-        fold, pend, (f_ts, f_tid), late_inc = merge_fold(
-            new, pend, (f_ts, f_tid), late_ms
-        )
-        n_late += late_inc
-
+    def step(fold, st):
+        cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol = st
         rows = []
 
         def close_bucket():
@@ -166,14 +133,12 @@ def make_vpin_processor(
             w_imb = sum(ring_imb) + imb
             w_vol = sum(ring_vol) + vol
             rows.append((
-                symbol,
-                int(cur_b),
-                int(cur_n),
+                cur_b,
+                cur_n,
                 vol / UNITS,
                 imb / UNITS,
                 len(ring_imb) + 1,
                 _round6((w_imb / UNITS) / (w_vol / UNITS)),
-                int(n_late),
             ))
             ring_imb.append(imb)
             ring_vol.append(vol)
@@ -195,20 +160,19 @@ def make_vpin_processor(
                 buy += units
             cum += units
 
-        state.update((
-            int(cum),
-            int(cur_b) if cur_b is not None else None,
-            int(cur_n), int(buy), int(sell),
-            ring_imb, ring_vol,
-            int(f_ts), int(f_tid), int(n_late),
-            [t[0] for t in pend], [t[1] for t in pend],
-            [t[2] for t in pend], [t[3] for t in pend],
-        ))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in VPIN_OUTPUT_SCHEMA.fields]
-        )
+        return rows, (cum, cur_b, cur_n, buy, sell, ring_imb, ring_vol)
 
-    return fn
+    return fold_driver(
+        VPIN_STATE_SCHEMA,
+        VPIN_OUTPUT_SCHEMA,
+        fields(
+            ("event_ts", "int64"), ("trade_id", "int64"),
+            ("qty", UNITS), ("is_buyer_maker", "bool"),
+        ),
+        init=(0, None, 0, 0, 0, [], []),
+        step=step,
+        late=allowed_lateness_s * 1000,
+    )
 
 
 def stream_vpin(

@@ -3,9 +3,13 @@ completion with processAllAvailable (synchronous micro-batching)."""
 
 from __future__ import annotations
 
+import math
 import os
+import random
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from bitcoin_datapipeline_spark.functions.normalize import valid_trades
@@ -1770,3 +1774,452 @@ def test_stream_markout_real_stream_delayed_emission(spark, tmp_path):
         w.markout_1s_bps, w.markout_10s_bps, w.markout_60s_bps
     )
     assert g.markout_1s_bps == 200.0  # mid 100 -> 101 on a buy
+
+
+# --- bounded-lateness twins: checkpoint pins, unit conversion, wrappers ---
+
+# simpleString() of every bounded-lateness twin's state and output
+# schema.  A restored checkpoint holds state rows in the state layout and
+# sinks hold rows in the output layout, so any change here breaks
+# existing checkpoints: change a pin only together with a migration.
+_TWIN_SCHEMA_PINS = {
+    "cusum.CUSUM_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,s_up:double,s_dn:double"
+        ",breach_up:boolean,breach_dn:boolean"
+        ",n_breach_up_cum:bigint,n_breach_dn_cum:bigint"
+        ",late_dropped:bigint>"
+    ),
+    "cusum.CUSUM_STATE_SCHEMA": (
+        "struct<p_units:bigint,pmin_units:bigint,pmax_units:bigint"
+        ",seen:boolean,cum_up:bigint,cum_dn:bigint"
+        ",frontier_b:bigint,n_late:bigint,pend_b:array<bigint>"
+        ",pend_x:array<bigint>>"
+    ),
+    "impact.ACF_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,lag:int,n_pairs:bigint"
+        ",acf:double,late_dropped:bigint>"
+    ),
+    "impact.ACF_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint,prev_close:bigint"
+        ",dp_ring:array<bigint>,m_n:array<bigint>"
+        ",m_sx:array<bigint>,m_sy:array<bigint>,m_sxy:array<bigint>"
+        ",m_sxx:array<bigint>,m_syy:array<bigint>>"
+    ),
+    "impact.ATR_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,atr:double"
+        ",atr_norm:double,late_dropped:bigint>"
+    ),
+    "impact.ATR_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_high:bigint,cur_low:bigint"
+        ",cur_close:bigint,prev_close:bigint,tr_ring:array<bigint>>"
+    ),
+    "impact.BOLL_OUTPUT_SCHEMA": (
+        "struct<symbol:string,day:bigint,n_eval:bigint"
+        ",n_upper_breach:bigint,n_lower_breach:bigint"
+        ",mean_bandwidth:double,late_dropped:bigint>"
+    ),
+    "impact.BOLL_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint"
+        ",close_ring:array<bigint>,cur_day:bigint,day_n:bigint"
+        ",day_up:bigint,day_lo:bigint,day_bw_sum:double>"
+    ),
+    "impact.CANDLE_OUTPUT_SCHEMA": (
+        "struct<symbol:string,day:bigint,n_bars:bigint"
+        ",n_flat:bigint,n_doji:bigint,n_hammer:bigint"
+        ",n_bull_engulf:bigint,n_bear_engulf:bigint"
+        ",late_dropped:bigint>"
+    ),
+    "impact.CANDLE_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_o:bigint,cur_h:bigint,cur_l:bigint"
+        ",cur_c:bigint,prev_open:bigint,prev_close:bigint"
+        ",cur_day:bigint,day_bars:bigint,day_flat:bigint"
+        ",day_doji:bigint,day_hammer:bigint,day_bull:bigint"
+        ",day_bear:bigint>"
+    ),
+    "impact.DD_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_bars:bigint"
+        ",max_drawdown:double,trough_bucket:bigint"
+        ",peak_close:double,trough_close:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.DD_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint,peak:bigint"
+        ",n_bars:bigint,worst_dd:double,worst_bucket:bigint"
+        ",worst_peak:bigint,worst_close:bigint>"
+    ),
+    "impact.ESPREAD_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_trades:bigint"
+        ",eff_spread_bps:double,quoted_spread_bps:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.ESPREAD_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_k2:bigint,n_late:bigint"
+        ",pend_ts:array<bigint>,pend_k2:array<bigint>"
+        ",pend_b:array<double>,pend_a:array<double>"
+        ",pend_bs:array<double>,pend_asz:array<double>"
+        ",pend_px:array<double>,pend_ets:array<bigint>,qb:double"
+        ",qa:double,cur_bucket:bigint,cur_n:bigint,sum_eff:double"
+        ",sum_quoted:double>"
+    ),
+    "impact.KYLE_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_buckets:bigint"
+        ",kyle_lambda:double,impact_intercept:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.KYLE_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",pend_qty:array<bigint>,pend_maker:array<boolean>"
+        ",cur_bucket:bigint,cur_sv:bigint,cur_open:bigint"
+        ",cur_close:bigint,n_closed:bigint,sx_u:bigint,sy_u:bigint"
+        ",sxy_u:bigint,sxx_u:bigint>"
+    ),
+    "impact.MACD_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,macd:double"
+        ",signal:double,histogram:double,crossover:boolean"
+        ",n_in_window:bigint,late_dropped:bigint>"
+    ),
+    "impact.MACD_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint"
+        ",close_ring:array<bigint>,macd_ring:array<double>"
+        ",prev_hist:double>"
+    ),
+    "impact.MARKOUT_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_trades:bigint"
+        ",markout_1s_bps:double,markout_10s_bps:double"
+        ",markout_60s_bps:double,late_dropped:bigint>"
+    ),
+    "impact.MARKOUT_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_k2:bigint,n_late:bigint"
+        ",pend_ts:array<bigint>,pend_k2:array<bigint>"
+        ",pend_bid:array<bigint>,pend_ask:array<bigint>"
+        ",pend_px:array<bigint>,pend_mk:array<boolean>"
+        ",q_avail:array<bigint>,q_bid:array<bigint>"
+        ",q_ask:array<bigint>,t_ts:array<bigint>,t_px:array<bigint>"
+        ",t_mk:array<boolean>,t_mid0:array<double>"
+        ",t_mo:array<array<double>>,seen_key:array<string>"
+        ",bk_id:array<bigint>,bk_n:array<bigint>"
+        ",bk_s:array<array<double>>>"
+    ),
+    "impact.MOM_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,close:double"
+        ",momentum:double,acceleration:double,volume_trend:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.MOM_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",pend_qty:array<bigint>,cur_bucket:bigint,cur_close:bigint"
+        ",cur_vol:bigint,prev_close:bigint,prev_mom:bigint"
+        ",prev_vol:bigint>"
+    ),
+    "impact.OBV_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,volume:double"
+        ",obv:double,late_dropped:bigint>"
+    ),
+    "impact.OBV_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",pend_qty:array<bigint>,cur_bucket:bigint,cur_close:bigint"
+        ",cur_vol:bigint,prev_close:bigint,obv_units:bigint>"
+    ),
+    "impact.OFI_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_updates:bigint"
+        ",ofi:double,late_dropped:bigint>"
+    ),
+    "impact.OFI_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_ingest:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_ingest:array<bigint>,pend_bpx:array<double>"
+        ",pend_apx:array<double>,pend_qb:array<bigint>"
+        ",pend_qa:array<bigint>,prev_bpx:double,prev_apx:double"
+        ",prev_qb:bigint,prev_qa:bigint,cur_bucket:bigint"
+        ",cur_n:bigint,cur_ofi_u:bigint>"
+    ),
+    "impact.ROLL_OUTPUT_SCHEMA": (
+        "struct<symbol:string,n_pairs:bigint,serial_cov:double"
+        ",roll_spread:double,late_dropped:bigint>"
+    ),
+    "impact.ROLL_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",last_price:bigint,prev_dp:bigint,n_pairs:bigint"
+        ",sx_u:bigint,sy_u:bigint,sxy_u:bigint>"
+    ),
+    "impact.RSI_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,rsi:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.RSI_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint,prev_close:bigint"
+        ",dc_ring:array<bigint>>"
+    ),
+    "impact.RVOL_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,close:double"
+        ",volatility:double,n_in_window:bigint,late_dropped:bigint>"
+    ),
+    "impact.RVOL_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint"
+        ",close_ring:array<bigint>>"
+    ),
+    "impact.STOCH_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,k_pct:double"
+        ",d_pct:double,late_dropped:bigint>"
+    ),
+    "impact.STOCH_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_high:bigint,cur_low:bigint"
+        ",cur_close:bigint,hi_ring:array<bigint>"
+        ",lo_ring:array<bigint>,k_ring:array<bigint>>"
+    ),
+    "impact.TWA_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_intervals:bigint"
+        ",quoted_ms:bigint,twa_spread_bps:double"
+        ",late_dropped:bigint>"
+    ),
+    "impact.TWA_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_ing:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_ing:array<bigint>,pend_bid:array<double>"
+        ",pend_ask:array<double>,pend_bs:array<double>"
+        ",pend_as:array<double>,lq_ts:bigint,lq_spread:double"
+        ",cur_bucket:bigint,cur_n:bigint,cur_w:bigint"
+        ",cur_sw:double>"
+    ),
+    "impact.VR_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_short:bigint"
+        ",n_long:bigint,var_1:double,var_q:double"
+        ",variance_ratio:double,late_dropped:bigint>"
+    ),
+    "impact.VR_STATE_SCHEMA": (
+        "struct<frontier_ts:bigint,frontier_tid:bigint"
+        ",n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_price:array<bigint>"
+        ",cur_bucket:bigint,cur_close:bigint,prev_close:bigint"
+        ",dp_ring:array<bigint>,n_short:bigint,sx_u:bigint"
+        ",sxx_u:bigint,n_long:bigint,sq_u:bigint,sqq_u:bigint>"
+    ),
+    "vpin.VPIN_OUTPUT_SCHEMA": (
+        "struct<symbol:string,bucket:bigint,n_trades:bigint"
+        ",bucket_volume:double,imbalance:double,n_in_window:bigint"
+        ",vpin:double,late_dropped:bigint>"
+    ),
+    "vpin.VPIN_STATE_SCHEMA": (
+        "struct<cum_units:bigint,cur_bucket:bigint,cur_n:bigint"
+        ",cur_buy:bigint,cur_sell:bigint,ring_imb:array<bigint>"
+        ",ring_vol:array<bigint>,frontier_ts:bigint"
+        ",frontier_tid:bigint,n_late:bigint,pend_ts:array<bigint>"
+        ",pend_tid:array<bigint>,pend_units:array<bigint>"
+        ",pend_maker:array<boolean>>"
+    ),
+}
+
+
+def test_twin_state_and_output_schemas_pinned():
+    import importlib
+
+    got = {}
+    for mod in ("cusum", "impact", "vpin"):
+        m = importlib.import_module(f"bitcoin_datapipeline_spark.streaming.{mod}")
+        for name in dir(m):
+            if name.endswith(("_STATE_SCHEMA", "_OUTPUT_SCHEMA")):
+                got[f"{mod}.{name}"] = getattr(m, name).simpleString()
+    assert len(got) == 40
+    assert got == _TWIN_SCHEMA_PINS
+
+
+# doubles on the 1e-4 (qty/price) and 1e-6 (price_change) grids, either
+# sign, plus exact half-unit ties: odd/32 · 1e4 and odd/128 · 1e6 are
+# k + 0.5 exactly, where round-half-even decides
+_UNIT_VALUES = st.one_of(
+    st.integers(-(10**12), 10**12).map(lambda n: n / 10**4),
+    st.integers(-(10**12), 10**12).map(lambda n: n / 10**6),
+    st.integers(-(10**9), 10**9).map(lambda n: (2 * n + 1) / 32),
+    st.integers(-(10**9), 10**9).map(lambda n: (2 * n + 1) / 128),
+)
+
+
+@example(xs=[1 / 32, 3 / 32, -1 / 32, -3 / 32], scale=10**4, as_decimal=False)
+@example(xs=[1 / 128, 3 / 128, -5 / 128], scale=10**6, as_decimal=True)
+@given(
+    xs=st.lists(_UNIT_VALUES, min_size=1, max_size=40),
+    scale=st.sampled_from([10**4, 10**6]),
+    as_decimal=st.booleans(),
+)
+@settings(max_examples=300, deadline=None)
+def test_vectorized_unit_conversion_matches_per_row_round(xs, scale, as_decimal):
+    """The fold driver's numpy integer-unit step equals the per-row
+    int(round(float(x) * UNITS)) element for element, on float64 and on
+    Decimal (object-dtype) columns."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from bitcoin_datapipeline_spark.streaming.disorder import fields
+
+    vals = [Decimal(repr(x)) for x in xs] if as_decimal else xs
+    frame = pd.DataFrame(
+        {"x": pd.Series(vals, dtype=object if as_decimal else "float64")}
+    )
+    got = fields(("x", scale)).build(frame)[0].tolist()
+    assert got == [int(round(float(v) * scale)) for v in vals]
+
+
+_WRAPPER_INPUTS = {
+    "trades": "symbol string, event_ts long, trade_id long, price double",
+    "bba": (
+        "symbol string, event_ts long, ingest_ts long, bid_px double,"
+        " ask_px double, bid_sz double, ask_sz double"
+    ),
+    "bars": "symbol string, bucket long, price_change double",
+}
+
+
+def _wrapper_tape(kind):
+    """Two symbols x 60 in-order rows: two per minute over 30 minutes
+    (one bar per row for the CUSUM bar input)."""
+    rng = random.Random(11)
+    rows = []
+    for sym in ("A", "B"):
+        p = 100.0
+        for i in range(60):
+            ts = (i // 2) * 60_000 + 1 + (i % 2) * 7_000
+            p = round(p + rng.choice((-0.37, -0.12, 0.0, 0.21, 0.45)), 2)
+            if kind == "trades":
+                rows.append((sym, ts, i, p))
+            elif kind == "bba":
+                rows.append((
+                    sym, ts, ts + 3, round(p - 0.05, 2), round(p + 0.05, 2),
+                    round(rng.uniform(0.1, 5.0), 4),
+                    round(rng.uniform(0.1, 5.0), 4),
+                ))
+            else:
+                rows.append((sym, i, round(rng.uniform(-0.4, 0.4), 6)))
+    return rows
+
+
+def _wrapper_case(name):
+    """(stream wrapper, processor factory, input kind) with equal knobs."""
+    from bitcoin_datapipeline_spark.streaming import cusum
+    from bitcoin_datapipeline_spark.streaming import impact as im
+
+    return {
+        "stream_acf": (im.stream_acf, im.make_acf_processor, "trades"),
+        "stream_atr": (
+            lambda s: im.stream_atr(s, period=3),
+            lambda: im.make_atr_processor(period=3),
+            "trades",
+        ),
+        "stream_cusum": (
+            cusum.stream_cusum, cusum.make_cusum_processor, "bars",
+        ),
+        "stream_macd": (im.stream_macd, im.make_macd_processor, "trades"),
+        "stream_ofi": (im.stream_ofi, im.make_ofi_processor, "bba"),
+        "stream_roll_spread": (
+            im.stream_roll_spread, im.make_roll_processor, "trades",
+        ),
+        "stream_stochastic": (
+            lambda s: im.stream_stochastic(s, period=3),
+            lambda: im.make_stoch_processor(period=3),
+            "trades",
+        ),
+        "stream_variance_ratio": (
+            im.stream_variance_ratio, im.make_vr_processor, "trades",
+        ),
+    }[name]
+
+
+def _canon_rows(rows):
+    """Order-free, type-normalized rows: numpy scalars to Python, NaN to
+    a comparable marker (NULL stays None)."""
+
+    def norm(x):
+        if hasattr(x, "item"):
+            x = x.item()
+        return "NaN" if isinstance(x, float) and math.isnan(x) else x
+
+    return sorted((tuple(norm(x) for x in r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_acf", "stream_atr", "stream_cusum", "stream_macd",
+        "stream_ofi", "stream_roll_spread", "stream_stochastic",
+        "stream_variance_ratio",
+    ],
+)
+def test_stream_wrapper_real_stream_matches_replay(spark, tmp_path, name):
+    """Each wrapper through two REAL availableNow runs against one
+    checkpoint: the state tuple must round-trip its StructType (the mock
+    state stores any tuple), and the rows equal the processor replayed
+    over the same two per-symbol chunks."""
+    from test_properties import _drive_processor
+
+    wrapper, factory, kind = _wrapper_case(name)
+    schema = _WRAPPER_INPUTS[kind]
+    cols = [c.split()[0] for c in schema.split(",")]
+    rows = _wrapper_tape(kind)
+    # each symbol's first 30 rows land in run one, its last 30 in run two
+    # — the split _drive_processor(n_chunks=2) makes per symbol
+    parts = [
+        [r for j, r in enumerate(rows) if (j % 60 < 30) == first]
+        for first in (True, False)
+    ]
+
+    src = tmp_path / "src"
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    src.mkdir()
+    for j, part in enumerate(parts):
+        spark.createDataFrame(part, schema).coalesce(1).write.parquet(
+            str(src / f"p{j}")
+        )
+        q = (
+            wrapper(
+                spark.readStream.schema(
+                    spark.createDataFrame([], schema).schema
+                ).option("recursiveFileLookup", "true").parquet(str(src))
+            )
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    got = _canon_rows(tuple(r) for r in spark.read.parquet(out).collect())
+    recs = [Row(**dict(zip(cols, r))) for r in rows]
+    want = _canon_rows(_drive_processor(factory(), recs, cols, 2))
+    assert got and got == want
